@@ -26,8 +26,9 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
-from ..functions.vector import DISTANCE_FNS, dot_product
-from .knn import knn_join
+from ..functions.vector import DISTANCE_FNS
+from .index_maint import append_batch, probe_lists, read_reconciled, write_bulk
+from .knn import _query_col, knn
 
 
 def _lcg_doubles(n: int, seed: int) -> list[float]:
@@ -131,8 +132,6 @@ def ivf_search(
     scan.  ``query_vec`` may be a literal sequence or a 1-row DataFrame
     whose single column is the vector.
     """
-    from .knn import knn
-
     dist_fn = DISTANCE_FNS[metric]
     if isinstance(query_vec, DataFrame):
         qname = query_vec.columns[0]
@@ -142,7 +141,7 @@ def ivf_search(
         )
     else:
         probe = centroids.withColumn(
-            "_qd", dist_fn(F.col(centroid_vec_col), knn_query_col(query_vec))
+            "_qd", dist_fn(F.col(centroid_vec_col), _query_col(query_vec))
         )
     probe = probe.orderBy("_qd", centroid_id_col).limit(nprobe).select(centroid_id_col)
     bucket = assigned_corpus.join(F.broadcast(probe), centroid_id_col, "left_semi")
@@ -230,8 +229,6 @@ def ivf_index_write(
     (operators/index_maint.py): appends own their batch directory,
     deletes are tombstones, compaction folds back to ``batch_id=0``.
     """
-    from .index_maint import write_bulk
-
     write_bulk(assigned_corpus, path, centroid_id_col)
 
 
@@ -259,8 +256,6 @@ def ivf_index_append(
     Re-appending an existing id in a later batch is an upsert — the
     reconcile law in the search path keeps the latest version.
     """
-    from .index_maint import append_batch
-
     assigned = assign_ivf(
         new_vectors, centroids, vec_col=vec_col, id_col=id_col,
         centroid_id_col=centroid_id_col,
@@ -303,21 +298,13 @@ def ivf_index_search(
     pre-filter ANN, recall is relative to the probed lists: widen
     ``nprobe`` when the predicate is selective.
     """
-    from .knn import knn
-
-    dist_fn = DISTANCE_FNS[metric]
-    probe_rows = (
-        centroids.withColumn(
-            "_qd", dist_fn(F.col(centroid_vec_col), knn_query_col(query_vec))
+    qcol = _query_col(query_vec)  # built once: each literal is a py4j call
+    probe_ids = [
+        r[centroid_id_col]
+        for r in probe_lists(
+            centroids, qcol, nprobe, metric, centroid_id_col, centroid_vec_col
         )
-        .orderBy("_qd", centroid_id_col)
-        .limit(nprobe)
-        .select(centroid_id_col)
-        .collect()
-    )
-    probe_ids = [r[centroid_id_col] for r in probe_rows]
-    from .index_maint import read_reconciled
-
+    ]
     # read_reconciled applies the maintenance law (latest batch wins,
     # tombstones hide) ONLY when the directory listing says the tree
     # has >1 batch or tombstones; a freshly bulk-built index keeps the
@@ -335,7 +322,7 @@ def ivf_index_search(
     if pre_filter is not None:
         index = index.filter(pre_filter)
     return knn(
-        index, query_vec, k=k, metric=metric, vec_col=vec_col, id_col=id_col,
+        index, qcol, k=k, metric=metric, vec_col=vec_col, id_col=id_col,
         payload_cols=payload_cols,
     )
 
@@ -361,42 +348,6 @@ def ivf_index_stats(
         "n_vectors",
         F.round(F.col("n_vectors") / F.col("_total"), 4).alias("frac"),
     )
-
-
-def ivf_index_delete(
-    ids: DataFrame,
-    path: str,
-    id_col: str = "vec_id",
-    batch_id: int | None = None,
-) -> None:
-    """Delete vectors from a persisted IVF index by tombstone: marker
-    rows land under ``{path}/_tombstones`` (hidden from plain reads),
-    and the search path's reconcile hides every version of the id
-    written at or before the tombstone's batch — a later re-append
-    resurrects it (operators/index_maint.py).  No list directory is
-    rewritten: at 100 TB a delete is a bounded marker write, and the
-    physical rows are reclaimed by :func:`ivf_index_compact`."""
-    from .index_maint import write_tombstones
-
-    write_tombstones(ids, path, id_col, batch_id=batch_id)
-
-
-def ivf_index_compact(
-    spark,
-    src_path: str,
-    dest_path: str,
-    id_col: str = "vec_id",
-    centroid_id_col: str = "centroid_id",
-) -> None:
-    """Fold an appended/deleted-upon IVF index back to one clean
-    ``batch_id=0`` level at a NEW path: latest version per id kept,
-    tombstoned ids physically dropped, one file set per inverted list
-    (the small-files payback of log-structured maintenance).  Searches
-    hash-match across the compaction because search and compaction
-    share the reconcile law (gated by ``ann_ivf_index_compact``)."""
-    from .index_maint import compact_index
-
-    compact_index(spark, src_path, dest_path, id_col, centroid_id_col)
 
 
 def ivf_index_rebuild(
@@ -425,8 +376,6 @@ def ivf_index_rebuild(
     rewrite."""
     from .kmeans import kmeans_fit_sampled
 
-    from .index_maint import read_reconciled
-
     if src_path == dest_path:
         raise ValueError("rebuild writes to a new path; swap after validation")
     # Rebuild from the LOGICAL contents: superseded versions and
@@ -441,12 +390,6 @@ def ivf_index_rebuild(
     )
     ivf_index_write(assigned, dest_path, centroid_id_col=centroid_id_col)
     return centroids
-
-
-def knn_query_col(query_vec) -> Column:
-    if isinstance(query_vec, Column):
-        return query_vec
-    return F.array(*[F.lit(float(v)) for v in query_vec])
 
 
 def recall_sweep(
@@ -582,8 +525,6 @@ def lsh_search(
     payload_cols=None,
 ) -> DataFrame:
     """Exact top-k restricted to the query's LSH bucket."""
-    from .knn import knn
-
     tagged = corpus.withColumn("_bucket", lsh_bucket(f"`{vec_col}`", planes))
     qbucket = lsh_bucket(sql_double_array([float(v) for v in query_vec]), planes)
     bucket = tagged.filter(F.col("_bucket") == qbucket).drop("_bucket")
@@ -616,6 +557,14 @@ def lsh_index_write(
     tagged.write.mode("overwrite").partitionBy(bucket_col).parquet(path)
 
 
+def _query_bucket(spark, query_vec, planes: list[list[float]]) -> int:
+    """The query's LSH bucket, computed by the SAME ``lsh_bucket``
+    expression that tags the corpus (a 1-row Spark job, so the two sides
+    can never drift in summation order)."""
+    qrow = spark.range(1).select(_query_col(query_vec).alias("_qv"))
+    return qrow.select(lsh_bucket("_qv", planes).alias("_b")).first()["_b"]
+
+
 def lsh_index_search(
     spark,
     path: str,
@@ -627,31 +576,30 @@ def lsh_index_search(
     id_col: str = "vec_id",
     bucket_col: str = "bucket",
     payload_cols=None,
+    max_flips: int = 0,
 ) -> DataFrame:
     """Search a persisted LSH index with *static* partition pruning.
 
-    The query's bucket is computed by the SAME ``lsh_bucket`` expression
-    that built the index (a 1-row Spark job — a bounded collect, like
-    the nprobe-row collect in :func:`ivf_index_search` — so the two
-    sides can never drift in summation order), then the index is read
-    with a literal equality on the partition column: the filter lands in
-    ``PartitionFilters`` and only one directory is ever opened (the
-    delete-proof is tests/test_lsh_index.py).  In-bucket top-k is the
-    flagship TakeOrderedAndProject — zero exchanges end to end.
+    The probe set is the query's bucket (:func:`_query_bucket`) plus,
+    with ``max_flips > 0``, every bucket within that many sign-bit flips
+    (multi-probe: with 8 planes and max_flips=1 the probe reads 9 of 256
+    buckets).  The index is read with a literal ``isin`` on the
+    partition column: the filter lands in ``PartitionFilters`` and only
+    the probed directories are ever opened (the delete-proof is
+    tests/test_lsh_index.py).  In-bucket top-k is the flagship
+    TakeOrderedAndProject — zero exchanges end to end.
     """
-    from .knn import knn
-
-    qrow = spark.range(1).select(knn_query_col(query_vec).alias("_qv"))
-    qbucket = qrow.select(lsh_bucket("_qv", planes).alias("_b")).first()["_b"]
+    qcol = _query_col(query_vec)  # built once: each literal is a py4j call
+    qbucket = _query_bucket(spark, qcol, planes)
+    probe = multiprobe_buckets(qbucket, len(planes), max_flips)
     index = (
-        spark.read.parquet(path)
-        .filter(F.col(bucket_col) == F.lit(qbucket))
+        read_reconciled(spark, path, id_col, prune=F.col(bucket_col).isin(probe))
         # partition values round-trip through directory names; restore
         # the pre-write integer type after the pruning filter
         .withColumn(bucket_col, F.col(bucket_col).cast("long"))
     )
     return knn(
-        index, query_vec, k=k, metric=metric, vec_col=vec_col, id_col=id_col,
+        index, qcol, k=k, metric=metric, vec_col=vec_col, id_col=id_col,
         payload_cols=payload_cols,
     )
 
@@ -684,48 +632,11 @@ def lsh_search_multiprobe(
     ``max_flips``-bit neighbors — recall approaches nprobe-style IVF
     widening without more hash tables.  With 8 planes and max_flips=1
     the probe reads 9 of 256 buckets (~3.5% of the corpus) instead of 1."""
-    from .knn import knn
-
-    spark = corpus.sparkSession
-    qrow = spark.range(1).select(knn_query_col(query_vec).alias("_qv"))
-    qbucket = qrow.select(lsh_bucket("_qv", planes).alias("_b")).first()["_b"]
+    qbucket = _query_bucket(corpus.sparkSession, query_vec, planes)
     probe = multiprobe_buckets(qbucket, len(planes), max_flips)
     tagged = corpus.withColumn("_bucket", lsh_bucket(f"`{vec_col}`", planes))
     bucket = tagged.filter(F.col("_bucket").isin(probe)).drop("_bucket")
     return knn(
         bucket, query_vec, k=k, metric=metric, vec_col=vec_col, id_col=id_col,
-        payload_cols=payload_cols,
-    )
-
-
-def lsh_index_search_multiprobe(
-    spark,
-    path: str,
-    query_vec,
-    planes: list[list[float]],
-    k: int = 5,
-    metric: str = "cosine",
-    max_flips: int = 1,
-    vec_col: str = "embedding",
-    id_col: str = "vec_id",
-    bucket_col: str = "bucket",
-    payload_cols=None,
-) -> DataFrame:
-    """Multi-probe against the PERSISTED bucket-partitioned index: the
-    literal ``isin`` over the probe set lands in PartitionFilters, so
-    exactly |probe set| directories are opened — multi-probe recall at
-    partition-pruned cost."""
-    from .knn import knn
-
-    qrow = spark.range(1).select(knn_query_col(query_vec).alias("_qv"))
-    qbucket = qrow.select(lsh_bucket("_qv", planes).alias("_b")).first()["_b"]
-    probe = multiprobe_buckets(qbucket, len(planes), max_flips)
-    index = (
-        spark.read.parquet(path)
-        .filter(F.col(bucket_col).isin(probe))
-        .withColumn(bucket_col, F.col(bucket_col).cast("long"))
-    )
-    return knn(
-        index, query_vec, k=k, metric=metric, vec_col=vec_col, id_col=id_col,
         payload_cols=payload_cols,
     )

@@ -1,6 +1,7 @@
-"""Shared maintenance layer for the persisted index trees (IVF, IVF-PQ,
-BM25 postings): batch-keyed layout, idempotent streaming appends,
-tombstoned deletes, and compaction.
+"""Shared layer for the persisted index trees: the batch-keyed layout,
+idempotent streaming appends, tombstoned deletes and compaction of the
+IVF, IVF-PQ and BM25 postings trees, and the one search path every
+persisted vector index (IVF, LSH, SQ8, IVF-SQ8, IVF-PQ, PCA) shares.
 
 Layout contract
 ---------------
@@ -45,33 +46,74 @@ file set per list — the small-files payback), write to a NEW path.
 Post-compact searches are hash-identical to pre-compact ones because
 both sides go through the same :func:`reconcile` law (gated by
 ``ann_ivf_index_compact`` and tests/test_index_maint.py).
+
+Search
+------
+A persisted vector index answers a query in at most four steps, each
+written once here:
+
+1. **Probe** — :func:`probe_lists` ranks the coarse lists (IVF,
+   IVF-SQ8, IVF-PQ centroids) against the query with the declared
+   ``(distance, centroid_id)`` tiebreak and collects the ``nprobe``
+   winners — a driver collect bounded by the probe width.  LSH probes
+   its query bucket (plus ``max_flips`` Hamming neighbours) instead.
+2. **Pruned read** — :func:`read_reconciled` with ``prune`` set to a
+   literal ``isin`` on the list key: the filter lands in
+   ``PartitionFilters``, so unprobed lists cost zero I/O; reconcile
+   engages only on a tree that has appends or tombstones (a tree with
+   no ``batch_id`` level is a plain pruned read).  SQ8 and PCA have no
+   lists and skip steps 1-2.
+3. **Score** — IVF and LSH hold float vectors, so ``knn.knn`` over the
+   probed lists is already exact and the search ends here.  The
+   compressed families score their codes instead (int8 ADC for SQ8
+   and IVF-SQ8, per-list LUT ADC for IVF-PQ, projected L2 for PCA).
+4. **Pool and exact rerank** — :func:`rerank_pool` keeps the
+   ``k * oversample`` best ids by that score, re-reads only those rows
+   from the float corpus via a pushed ``In`` filter and returns
+   ``knn.knn`` over them: exact double L2, ``(distance, id)`` tiebreak.
+
+The BM25 and phrase postings share the layout and maintenance above
+but NOT this search path: their rows are keyed by ``(doc_id, term)``,
+and the per-id reconcile would collapse a document's terms to one row.
 """
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession
+from collections.abc import Sequence
+
+from pyspark.sql import Column, DataFrame, Row, SparkSession
 from pyspark.sql import functions as F
+
+from ..functions.vector import DISTANCE_FNS
+from .knn import _query_col, knn
 
 BATCH_COL = "batch_id"
 TOMBSTONE_DIR = "_tombstones"
 
 
-def _fs_list_names(spark: SparkSession, path: str) -> list[str]:
+def _fs_list_names(spark: SparkSession, path: str, glob: str | None = None) -> list[str]:
     """Child names of ``path`` via the Hadoop FS API (works on local,
     HDFS, and object stores) — a pure driver-side listing, no Spark
-    job.  Empty list if the path does not exist."""
+    job.  ``glob`` keeps only the matching children, filtered JVM-side
+    (each returned name costs py4j round-trips, and a list-keyed tree
+    such as LSH's has up to 2^bits children).  Empty list if the path
+    does not exist."""
     jvm = spark._jvm
     hpath = jvm.org.apache.hadoop.fs.Path(path)
     fs = hpath.getFileSystem(spark._jsc.hadoopConfiguration())
     if not fs.exists(hpath):
         return []
-    return [st.getPath().getName() for st in fs.listStatus(hpath)]
+    if glob is None:
+        found = fs.listStatus(hpath)
+    else:
+        found = fs.globStatus(jvm.org.apache.hadoop.fs.Path(hpath, glob)) or []
+    return [st.getPath().getName() for st in found]
 
 
 def index_state(spark: SparkSession, path: str) -> tuple[list[int], bool]:
     """``(sorted batch ids, has_tombstones)`` of an index tree, from one
     directory listing."""
-    names = _fs_list_names(spark, path)
+    names = _fs_list_names(spark, path, f"{{{BATCH_COL}=*,{TOMBSTONE_DIR}}}")
     batches = sorted(
         int(n.split("=", 1)[1]) for n in names if n.startswith(BATCH_COL + "=")
     )
@@ -343,3 +385,57 @@ def compact_index(
     # — the old repartition(keys) here forced ONE task per list, which
     # at scale both serializes a hot list and emits one oversized file.
     write_bulk(clean, dest_path, keys)
+
+
+def probe_lists(
+    centroids: DataFrame,
+    query_vec,
+    nprobe: int,
+    metric: str = "l2",
+    centroid_id_col: str = "centroid_id",
+    centroid_vec_col: str = "centroid_vec",
+) -> list[Row]:
+    """The ``nprobe`` coarse lists nearest the query, as collected
+    ``(centroid_id, centroid_vec)`` rows in probe order.  Ties break on
+    ``(distance, centroid_id)``, so equal centroids probe the lower id.
+    One bounded collect of ``nprobe`` rows — the same small movement a
+    broadcast of the centroid table performs."""
+    dist = DISTANCE_FNS[metric](F.col(centroid_vec_col), _query_col(query_vec))
+    return (
+        centroids.withColumn("_qd", dist)
+        .orderBy("_qd", centroid_id_col)
+        .limit(nprobe)
+        .select(centroid_id_col, centroid_vec_col)
+        .collect()
+    )
+
+
+def rerank_pool(
+    scored: DataFrame,
+    coarse: Column,
+    corpus: DataFrame,
+    query_vec: Sequence[float] | Column,
+    k: int,
+    oversample: int,
+    vec_col: str = "embedding",
+    id_col: str = "vec_id",
+    payload_cols: Sequence[str] = (),
+    distance_col: str = "distance",
+) -> DataFrame:
+    """Cut ``scored`` to its ``k * oversample`` best ids by the
+    ``coarse`` score (ties on id), then exact-rerank those candidates
+    against the float corpus: a literal ``isin`` (parquet row-group stats
+    prune the re-read) feeding :func:`knn.knn`.  Returns
+    ``(id, *payload_cols, distance)``.  The pool collect is bounded at
+    ``k * oversample`` rows."""
+    pool = (
+        scored.orderBy(coarse.asc(), F.col(id_col).asc())
+        .limit(k * oversample)
+        .select(id_col)
+        .collect()
+    )
+    cand = corpus.filter(F.col(id_col).isin([r[id_col] for r in pool]))
+    return knn(
+        cand, query_vec, k=k, vec_col=vec_col, id_col=id_col,
+        payload_cols=[id_col, *payload_cols], distance_col=distance_col,
+    )

@@ -29,7 +29,7 @@ narrow from page rows to the sink).
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame
+from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 from ..functions.embed import DEFAULT_DIM, make_embedder
@@ -37,6 +37,19 @@ from ..functions.hashing import chunk_id
 from ..functions.text import chunk_exploded
 
 CORPUS_COLS = ["id", "embedding", "origntext", "fileName", "pageNumber", "chunk_index"]
+
+
+def _valid_embedding(dim: int) -> Column:
+    """pgvector's ``VECTOR(n)`` insert check as one predicate: the
+    embedding exists, has ``dim`` elements, and every element is a
+    finite number (pgvector rejects NaN and ±Inf).  It is false, never
+    null, for a null vector or a null element, so its negation selects
+    exactly the rejected rows."""
+    emb = F.col("embedding")
+    finite = F.forall(
+        emb, lambda x: x.isNotNull() & ~F.isnan(x) & (F.abs(x) != F.lit(float("inf")))
+    )
+    return emb.isNotNull() & (F.size(emb) == F.lit(dim)) & finite
 
 
 def pages_to_chunks(pages: DataFrame) -> DataFrame:
@@ -143,7 +156,7 @@ def ingest_pages(
     # runs once for this leg): the full success trail iff the embedding passes
     # the VECTOR(n) check, the terminal failure otherwise — the conditional
     # the reference forgot (Function.java:177).
-    valid = F.col("embedding").isNotNull() & (F.size("embedding") == F.lit(dim))
+    valid = _valid_embedding(dim)
     success_trail = F.array(
         F.lit("FINISH_OAI_INVOCATION"), F.lit("FINISH_DB_INSERTION"), F.lit("COMPLETED")
     )
@@ -162,12 +175,11 @@ def ingest_pages(
 
 def validate_corpus(corpus: DataFrame, dim: int = DEFAULT_DIM) -> DataFrame:
     """The engine-side twin of pgvector's ``VECTOR(n)`` insert check
-    (SURVEY.md §1.1): reject rows whose embedding is missing or has the
-    wrong dimensionality.  Returns the offending rows (empty = valid).
+    (SURVEY.md §1.1): reject rows whose embedding is missing, has the
+    wrong dimensionality, or holds a NaN, ±Inf or null element.  Returns
+    the offending rows (empty = valid).
     """
-    return corpus.filter(
-        F.col("embedding").isNull() | (F.size("embedding") != F.lit(dim))
-    )
+    return corpus.filter(~_valid_embedding(dim))
 
 
 def write_corpus(corpus: DataFrame, path: str, buckets: int = 64) -> None:

@@ -50,6 +50,7 @@ import numpy as np
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
+from .index_maint import rerank_pool
 from .quant import _approx_then_exact, _approx_then_exact_join
 
 
@@ -248,46 +249,16 @@ def pca_index_search(
        literal ``isin`` (parquet row-group stats prune the rest), exact
        double L2, final top-k.
 
-    The mid-plan ``collect()`` is bounded at ``k * oversample`` rows —
-    the same documented driver-sized materialization as
-    ``sq8_index_search`` / ``ivf_index_search``."""
+    The mid-plan ``collect()`` is bounded at ``k * oversample`` rows
+    (``index_maint.rerank_pool``, shared with the SQ8 and IVF-PQ
+    index searches)."""
     mu, comps = fitted
     qp = comps @ (np.asarray(query_vec, dtype=np.float64) - mu)
     qp_arr = F.array(*[F.lit(float(v)) for v in qp])
-    scored = (
-        spark.read.parquet(path)
-        .withColumn("qp", qp_arr)
-        .withColumn("pdist", _proj_l2sq(F.col("proj"), F.col("qp")))
+    scored = spark.read.parquet(path).withColumn(
+        "pdist", _proj_l2sq(F.col("proj"), qp_arr)
     )
-    pool = (
-        scored.orderBy(F.col("pdist").asc(), F.col(id_col).asc())
-        .limit(k * oversample)
-        .select(id_col)
-        .collect()
-    )
-    cand_ids = [r[id_col] for r in pool]
-    qarr = F.array(*[F.lit(float(v)) for v in query_vec])
-    exact = (
-        corpus_df.filter(F.col(id_col).isin(cand_ids))
-        .withColumn("qv", qarr)
-        .withColumn(
-            "distance",
-            F.sqrt(
-                F.aggregate(
-                    F.zip_with(
-                        F.col(vec_col),
-                        F.col("qv"),
-                        lambda a, b: F.pow(a.cast("double") - b, F.lit(2.0)),
-                    ),
-                    F.lit(0.0),
-                    lambda acc, v: acc + v,
-                )
-            ),
-        )
-    )
-    cols = [id_col, *payload_cols, "distance"]
-    return (
-        exact.orderBy(F.col("distance").asc(), F.col(id_col).asc())
-        .limit(k)
-        .select(*cols)
+    return rerank_pool(
+        scored, F.col("pdist"), corpus_df, query_vec, k, oversample,
+        vec_col=vec_col, id_col=id_col, payload_cols=payload_cols,
     )

@@ -25,8 +25,17 @@ from __future__ import annotations
 
 import math
 
-from pyspark.sql import Column, DataFrame
+from pyspark.sql import Column, DataFrame, Row
 from pyspark.sql import functions as F
+
+from .index_maint import (
+    append_batch,
+    probe_lists,
+    read_reconciled,
+    rerank_pool,
+    write_bulk,
+)
+from .knn import _query_col
 
 
 def _dlit(x: float) -> str:
@@ -301,42 +310,17 @@ def trained_residual_codebooks(
     return [[[v / scale for v in c] for c in book] for book in books]
 
 
-def _rank_probes(
-    centroids: DataFrame,
-    query_vec: list[float],
-    nprobe: int,
-    centroid_id_col: str,
-    centroid_vec_col: str,
-) -> list[tuple[float, int, list[float]]]:
-    """Rank coarse centroids against the query driver-side — a collect
-    bounded by the centroid count, the same small data movement a
-    broadcast of the centroid table performs."""
-    return sorted(
-        (
-            (
-                sum(
-                    (float(query_vec[i]) - float(r[centroid_vec_col][i])) ** 2
-                    for i in range(len(query_vec))
-                ),
-                r[centroid_id_col],
-                list(r[centroid_vec_col]),
-            )
-            for r in centroids.collect()
-        )
-    )[:nprobe]
-
-
 def _adc_case(
-    ranked: list[tuple[float, int, list[float]]],
+    probes: list[Row],
     query_vec: list[float],
     codebooks: list[list[list[float]]],
     code_col: str,
     centroid_id_col: str,
 ) -> Column:
-    """Per-list ADC distance: a CASE on ``centroid_id`` selecting that
-    list's residual LUT (the residual query differs per centroid) —
-    nprobe literal m x ksub tables, m ``element_at`` lookups per row,
-    all inside codegen."""
+    """Per-list ADC distance over the :func:`probe_lists` rows: a CASE on
+    ``centroid_id`` selecting that list's residual LUT (the residual
+    query differs per centroid) — nprobe literal m x ksub tables, m
+    ``element_at`` lookups per row, all inside codegen."""
     dsub = len(codebooks[0][0])
     m = len(codebooks)
 
@@ -351,7 +335,7 @@ def _adc_case(
         ]
 
     dist = None
-    for _, cid, cvec in ranked:
+    for cid, cvec in probes:
         lut = lut_for(cvec)
         adc = F.lit(0.0)
         for j in range(m):
@@ -378,19 +362,21 @@ def ivfpq_search(
 ) -> DataFrame:
     """ADC search over the probed inverted lists.
 
-    Ranks centroids against the query driver-side (a collect bounded by
-    the centroid count — the same small relation a broadcast ships),
-    keeps ``nprobe`` lists, and scores each code row against the LUT of
-    *its own list* (the residual query differs per centroid, so the LUT
+    Ranks centroids against the query (:func:`probe_lists` — a collect
+    bounded by ``nprobe``), keeps those lists, and scores each code row
+    against the LUT of *its own list* (the residual query differs per centroid, so the LUT
     is selected by a CASE on ``centroid_id`` — nprobe literal arrays,
     still pure codegen arithmetic).  On an index persisted
     partitioned-by-centroid the ``isin`` filter prunes statically, and
     the top-k stays TakeOrderedAndProject: probed-bytes scan, m lookups
     per row, no shuffle.
     """
-    ranked = _rank_probes(centroids, query_vec, nprobe, centroid_id_col, centroid_vec_col)
-    dist = _adc_case(ranked, query_vec, codebooks, code_col, centroid_id_col)
-    probe_ids = [cid for _, cid, _ in ranked]
+    probes = probe_lists(
+        centroids, query_vec, nprobe,
+        centroid_id_col=centroid_id_col, centroid_vec_col=centroid_vec_col,
+    )
+    dist = _adc_case(probes, query_vec, codebooks, code_col, centroid_id_col)
+    probe_ids = [cid for cid, _ in probes]
     cols = list(payload_cols) if payload_cols is not None else [id_col]
     scored = (
         encoded.filter(F.col(centroid_id_col).isin(probe_ids))
@@ -472,8 +458,6 @@ def pq_index_write(
     Append-maintenance works like ``ann.ivf_index_append`` (centroids
     and codebooks stay fixed; retrain is the offline rebuild path).
     """
-    from .index_maint import write_bulk
-
     keep = [id_col, *(payload_cols or [])]
     encoded = ivfpq_encode(
         corpus, centroids, codebooks,
@@ -503,66 +487,35 @@ def pq_index_search(
 ) -> DataFrame:
     """Probe a persisted IVF-PQ index, then exact-rerank.
 
-    1. Rank centroids driver-side (collect bounded by the centroid
-       count) and keep ``nprobe`` lists.
+    1. Rank centroids (:func:`probe_lists`, a collect bounded by
+       ``nprobe``) and keep those lists.
     2. Read the codes artifact with a literal ``isin`` on the partition
        column — *static* pruning: only probed directories are opened.
     3. ADC-score each code row against its own list's LUT
        (:func:`_adc_case` — per-list residual tables, pure codegen) and
-       TakeOrdered down to ``k * oversample`` candidate ids (a bounded
-       collect, the ``sq8_index_search`` contract).
-    4. Exact double-L2 rerank of the candidates against the float
-       corpus via a pushed ``In`` filter (row-group stats prune the
-       re-read), final top-k with the (distance, id) tiebreak.
+       keep the ``k * oversample`` best candidate ids.
+    4. :func:`rerank_pool`: exact double-L2 rerank of the candidates
+       against the float corpus via a pushed ``In`` filter (row-group
+       stats prune the re-read), final top-k with the (distance, id)
+       tiebreak.
     """
-    ranked = _rank_probes(
-        centroids, query_vec, nprobe, centroid_id_col, centroid_vec_col
+    qcol = _query_col(query_vec)  # built once: each literal is a py4j call
+    probes = probe_lists(
+        centroids, qcol, nprobe,
+        centroid_id_col=centroid_id_col, centroid_vec_col=centroid_vec_col,
     )
-    dist = _adc_case(ranked, query_vec, codebooks, code_col, centroid_id_col)
-    probe_ids = [cid for _, cid, _ in ranked]
-
-    from .index_maint import read_reconciled
-
+    dist = _adc_case(probes, query_vec, codebooks, code_col, centroid_id_col)
     # Maintenance-aware read: reconcile (latest batch wins, tombstones
     # hide) engages only when the directory listing shows >1 batch or
     # tombstones, and then only over the probed lists — a bulk-built
     # index keeps its original pruned-scan plan (index_maint.py).
     codes = read_reconciled(
         spark, path, id_col,
-        prune=F.col(centroid_id_col).isin(probe_ids),
-    ).withColumn("_adc", dist)
-    pool = (
-        codes.orderBy(F.col("_adc").asc(), F.col(id_col).asc())
-        .limit(k * oversample)
-        .select(id_col)
-        .collect()
+        prune=F.col(centroid_id_col).isin([cid for cid, _ in probes]),
     )
-    cand_ids = [r[id_col] for r in pool]
-
-    qarr = F.array(*[F.lit(float(v)) for v in query_vec])
-    exact = (
-        corpus_df.filter(F.col(id_col).isin(cand_ids))
-        .withColumn("_qv", qarr)
-        .withColumn(
-            distance_col,
-            F.sqrt(
-                F.aggregate(
-                    F.zip_with(
-                        F.col(vec_col),
-                        F.col("_qv"),
-                        lambda a, b: F.pow(a.cast("double") - b, F.lit(2.0)),
-                    ),
-                    F.lit(0.0),
-                    lambda acc, v: acc + v,
-                )
-            ),
-        )
-    )
-    cols = [id_col, *(payload_cols or []), distance_col]
-    return (
-        exact.orderBy(F.col(distance_col).asc(), F.col(id_col).asc())
-        .limit(k)
-        .select(*cols)
+    return rerank_pool(
+        codes, dist, corpus_df, qcol, k, oversample, vec_col=vec_col,
+        id_col=id_col, payload_cols=payload_cols or [], distance_col=distance_col,
     )
 
 
@@ -585,8 +538,6 @@ def pq_index_append(
     union would produce, maintenance cost tracks the batch, and this
     is directly usable as a streaming ``foreachBatch`` body
     (streaming/index_stream.py::stream_into_pq_index)."""
-    from .index_maint import append_batch
-
     keep = [id_col, *(payload_cols or [])]
     encoded = ivfpq_encode(
         new_vectors, centroids, codebooks,
@@ -718,34 +669,3 @@ def ivfpq_search_join(
         adc.withColumn(rank_col, F.row_number().over(wk))
         .filter(F.col(rank_col) <= k)
     )
-
-
-def pq_index_delete(
-    ids,
-    path: str,
-    id_col: str = "vec_id",
-    batch_id: int | None = None,
-) -> None:
-    """Tombstone vectors out of a persisted IVF-PQ index — identical
-    contract to ``ann.ivf_index_delete`` (the maintenance layer is
-    shared, operators/index_maint.py): a bounded marker write, hidden
-    from plain reads, applied by the search path's reconcile and
-    reclaimed physically by :func:`pq_index_compact`."""
-    from .index_maint import write_tombstones
-
-    write_tombstones(ids, path, id_col, batch_id=batch_id)
-
-
-def pq_index_compact(
-    spark,
-    src_path: str,
-    dest_path: str,
-    id_col: str = "vec_id",
-    centroid_id_col: str = "centroid_id",
-) -> None:
-    """Fold an appended/deleted-upon IVF-PQ codes tree back to one
-    clean ``batch_id=0`` level at a NEW path (ann.ivf_index_compact's
-    twin on the codes-only layout)."""
-    from .index_maint import compact_index
-
-    compact_index(spark, src_path, dest_path, id_col, centroid_id_col)

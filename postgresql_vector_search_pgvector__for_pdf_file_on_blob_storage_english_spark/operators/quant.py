@@ -35,6 +35,10 @@ from typing import Sequence
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
+from ..functions.vector import l2_distance
+from .index_maint import probe_lists, read_reconciled, rerank_pool
+from .knn import _query_col
+
 _EPS = 1e-30  # zero-vector guard: scale floor, same literal in the oracles
 
 
@@ -69,6 +73,24 @@ def sq8_encode(
     return out.withColumn(code_col, code)
 
 
+def _sq8_adc(query: Column) -> Column:
+    """Asymmetric int8 distance ``sum((code_i*scale - q_i)^2)``: the
+    corpus side is the int8 ``code`` scaled by its ``scale``, the query
+    stays full precision — one multiply per dim over bytes instead of
+    floats."""
+    return F.aggregate(
+        F.zip_with(
+            F.col("code"),
+            query,
+            lambda c, q: F.pow(
+                c.cast("double") * F.col("scale") - q.cast("double"), F.lit(2.0)
+            ),
+        ),
+        F.lit(0.0),
+        lambda acc, v: acc + v,
+    )
+
+
 def _approx_then_exact(
     scored: DataFrame,
     approx_col: str,
@@ -85,20 +107,7 @@ def _approx_then_exact(
     pool = scored.orderBy(F.col(approx_col).asc(), F.col(id_col).asc()).limit(
         k * oversample
     )
-    exact = pool.withColumn(
-        "distance",
-        F.sqrt(
-            F.aggregate(
-                F.zip_with(
-                    F.col(vec_col),
-                    F.col(query_col),
-                    lambda a, b: F.pow(a.cast("double") - b.cast("double"), F.lit(2.0)),
-                ),
-                F.lit(0.0),
-                lambda acc, v: acc + v,
-            )
-        ),
-    )
+    exact = pool.withColumn("distance", l2_distance(vec_col, query_col))
     cols = [id_col, *payload_cols, "distance"]
     return exact.orderBy(F.col("distance").asc(), F.col(id_col).asc()).limit(k).select(*cols)
 
@@ -119,18 +128,7 @@ def sq8_knn(
     ``query_vec`` column (crossJoin-broadcast, like ``knn.py``)."""
     enc = sq8_encode(df, vec_col=vec_col)
     scored = enc.crossJoin(F.broadcast(query_df)).withColumn(
-        "adist",
-        F.aggregate(
-            F.zip_with(
-                F.col("code"),
-                F.col("query_vec"),
-                lambda c, q: F.pow(
-                    c.cast("double") * F.col("scale") - q.cast("double"), F.lit(2.0)
-                ),
-            ),
-            F.lit(0.0),
-            lambda acc, v: acc + v,
-        ),
+        "adist", _sq8_adc(F.col("query_vec"))
     )
     return _approx_then_exact(
         scored, "adist", vec_col, "query_vec", id_col, k, oversample, payload_cols
@@ -175,20 +173,7 @@ def _approx_then_exact_join(
     cand = corpus.join(F.broadcast(pool), id_col).join(
         F.broadcast(queries), query_id_col
     )
-    exact = cand.withColumn(
-        distance_col,
-        F.sqrt(
-            F.aggregate(
-                F.zip_with(
-                    F.col(vec_col),
-                    F.col(query_vec_col),
-                    lambda a, b: F.pow(a.cast("double") - b.cast("double"), F.lit(2.0)),
-                ),
-                F.lit(0.0),
-                lambda acc, v: acc + v,
-            )
-        ),
-    )
+    exact = cand.withColumn(distance_col, l2_distance(vec_col, query_vec_col))
     exact_narrow = exact.select(query_id_col, id_col, *payload_cols, distance_col)
     final_w = Window.partitionBy(query_id_col).orderBy(
         F.col(distance_col).asc(), F.col(id_col).asc()
@@ -234,18 +219,7 @@ def sq8_knn_join(
     """
     enc = sq8_encode(corpus, vec_col=vec_col)
     scored = enc.crossJoin(F.broadcast(queries)).withColumn(
-        "adist",
-        F.aggregate(
-            F.zip_with(
-                F.col("code"),
-                F.col(query_vec_col),
-                lambda c, q: F.pow(
-                    c.cast("double") * F.col("scale") - q.cast("double"), F.lit(2.0)
-                ),
-            ),
-            F.lit(0.0),
-            lambda acc, v: acc + v,
-        ),
+        "adist", _sq8_adc(F.col(query_vec_col))
     )
     return _approx_then_exact_join(
         corpus, queries, scored, "adist", k, oversample,
@@ -479,50 +453,11 @@ def sq8_index_search(
     (50 by default) — the same documented driver-sized materialization
     the IVF probe uses (``ann.py::ivf_index_search``).
     """
-    qarr = F.array(*[F.lit(float(v)) for v in query_vec])
-    codes = spark.read.parquet(path).withColumn("qv", qarr)
-    scored = codes.withColumn(
-        "adist",
-        F.aggregate(
-            F.zip_with(
-                F.col("code"),
-                F.col("qv"),
-                lambda c, q: F.pow(c.cast("double") * F.col("scale") - q, F.lit(2.0)),
-            ),
-            F.lit(0.0),
-            lambda acc, v: acc + v,
-        ),
-    )
-    pool = (
-        scored.orderBy(F.col("adist").asc(), F.col(id_col).asc())
-        .limit(k * oversample)
-        .select(id_col)
-        .collect()
-    )
-    cand_ids = [r[id_col] for r in pool]
-    exact = (
-        corpus_df.filter(F.col(id_col).isin(cand_ids))
-        .withColumn("qv", qarr)
-        .withColumn(
-            "distance",
-            F.sqrt(
-                F.aggregate(
-                    F.zip_with(
-                        F.col(vec_col),
-                        F.col("qv"),
-                        lambda a, b: F.pow(a.cast("double") - b, F.lit(2.0)),
-                    ),
-                    F.lit(0.0),
-                    lambda acc, v: acc + v,
-                )
-            ),
-        )
-    )
-    cols = [id_col, *payload_cols, "distance"]
-    return (
-        exact.orderBy(F.col("distance").asc(), F.col(id_col).asc())
-        .limit(k)
-        .select(*cols)
+    qcol = _query_col(query_vec)  # built once: each literal is a py4j call
+    codes = spark.read.parquet(path)
+    return rerank_pool(
+        codes, _sq8_adc(qcol), corpus_df, qcol, k, oversample,
+        vec_col=vec_col, id_col=id_col, payload_cols=payload_cols,
     )
 
 
@@ -580,65 +515,18 @@ def ivf_sq8_index_search(
     centroid ids + ``k * oversample`` candidate ids (the same contract
     as ``ann.py::ivf_index_search`` / ``sq8_index_search``).
     """
-    from .ann import knn_query_col
-    from ..functions.vector import l2_distance
-
-    qarr = knn_query_col(query_vec)
-    probe_rows = (
-        centroids.withColumn("_qd", l2_distance(F.col(centroid_vec_col), qarr))
-        .orderBy("_qd", centroid_id_col)
-        .limit(nprobe)
-        .select(centroid_id_col)
-        .collect()
-    )
-    probe_ids = [r[centroid_id_col] for r in probe_rows]
-    codes = (
-        spark.read.parquet(path)
-        .filter(F.col(centroid_id_col).isin(probe_ids))
-        .withColumn("qv", qarr)
-        .withColumn(
-            "adist",
-            F.aggregate(
-                F.zip_with(
-                    F.col("code"),
-                    F.col("qv"),
-                    lambda c, q: F.pow(
-                        c.cast("double") * F.col("scale") - q, F.lit(2.0)
-                    ),
-                ),
-                F.lit(0.0),
-                lambda acc, v: acc + v,
-            ),
+    qcol = _query_col(query_vec)  # built once: each literal is a py4j call
+    probe_ids = [
+        r[centroid_id_col]
+        for r in probe_lists(
+            centroids, qcol, nprobe,
+            centroid_id_col=centroid_id_col, centroid_vec_col=centroid_vec_col,
         )
+    ]
+    codes = read_reconciled(
+        spark, path, id_col, prune=F.col(centroid_id_col).isin(probe_ids)
     )
-    pool = (
-        codes.orderBy(F.col("adist").asc(), F.col(id_col).asc())
-        .limit(k * oversample)
-        .select(id_col)
-        .collect()
-    )
-    cand_ids = [r[id_col] for r in pool]
-    exact = (
-        corpus_df.filter(F.col(id_col).isin(cand_ids))
-        .withColumn("qv", qarr)
-        .withColumn(
-            "distance",
-            F.sqrt(
-                F.aggregate(
-                    F.zip_with(
-                        F.col(vec_col),
-                        F.col("qv"),
-                        lambda a, b: F.pow(a.cast("double") - b, F.lit(2.0)),
-                    ),
-                    F.lit(0.0),
-                    lambda acc, v: acc + v,
-                )
-            ),
-        )
-    )
-    cols = [id_col, *payload_cols, "distance"]
-    return (
-        exact.orderBy(F.col("distance").asc(), F.col(id_col).asc())
-        .limit(k)
-        .select(*cols)
+    return rerank_pool(
+        codes, _sq8_adc(qcol), corpus_df, qcol, k, oversample,
+        vec_col=vec_col, id_col=id_col, payload_cols=payload_cols,
     )

@@ -599,7 +599,7 @@ def mmr_rerank(
     discipline; λ is the rational ``lam_num/lam_den`` so the score
     ``lam_num*q_sim − (lam_den−lam_num)*max_sim`` stays integral).
     Only the bounded pool (ids + integer sims: pool_size + pool_size²
-    rows) reaches the driver — the ``_rank_probes``/pq-pool collect
+    rows) reaches the driver — the ``probe_lists``/``rerank_pool`` collect
     contract; the corpus-sized work is one pruned scan + TakeOrdered.
     First pick is pure relevance (empty-set penalty = 0, the standard
     MMR convention)."""

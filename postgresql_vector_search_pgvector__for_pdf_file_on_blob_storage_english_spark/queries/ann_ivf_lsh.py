@@ -38,7 +38,7 @@ def _local_centroids(spark: SparkSession, emb: DataFrame, n: int = _N_CENTROIDS)
     a win for the multi-step IVF-PQ fixtures, but both the 5-run cold
     bench medians (ann_ivfpq_probe 0.77 -> 0.93 s, ann_ivfpq_index_search
     4.02 -> 4.75 s) and an alternating bench-like process A/B
-    (tools/ab_cold_ivfpq.py: probe ~2.27 vs ~1.00 s) measured the
+    (commit c63aeb1: probe ~2.27 vs ~1.00 s) measured the
     blocking collect + createDataFrame as a consistent per-invocation
     REGRESSION, so every call site keeps the lazy pushed-filter branch
     (the form the single-search IVF entries never left).  Kept as the
@@ -387,9 +387,6 @@ _register(
 
 
 def _ann_lsh_search(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from ..operators.ann import knn_query_col
-    from ..operators.knn import knn
-
     emb = _t(spark, sf_dir, "embeddings")
     tagged = emb.withColumn("bucket", lsh_bucket("embedding", _LSH_PLANES))
     qrow = emb.filter(F.col("vec_id") == _LSH_PROBE_ID).select(
@@ -643,13 +640,8 @@ def _ann_ivf_index_compact(spark: SparkSession, sf_dir: str) -> DataFrame:
     import shutil
     import tempfile
 
-    from ..operators.ann import (
-        ivf_index_append,
-        ivf_index_compact,
-        ivf_index_delete,
-        ivf_index_search,
-        ivf_index_write,
-    )
+    from ..operators.ann import ivf_index_append, ivf_index_search, ivf_index_write
+    from ..operators.index_maint import compact_index, write_tombstones
 
     emb = _t(spark, sf_dir, "embeddings")
     # Deliberately a LAZY corpus branch: localizing these 16 rows via
@@ -678,8 +670,8 @@ def _ann_ivf_index_compact(spark: SparkSession, sf_dir: str) -> DataFrame:
     base = search(path).collect()  # bounded: 5 rows
     dead = [base[1]["vec_id"], base[2]["vec_id"]]
     upserted = base[3]["vec_id"]
-    ivf_index_delete(
-        spark.createDataFrame([(int(i),) for i in dead], "vec_id long"), path
+    write_tombstones(
+        spark.createDataFrame([(int(i),) for i in dead], "vec_id long"), path, "vec_id"
     )
     ivf_index_append(
         emb.filter(F.col("vec_id") == upserted).withColumn(
@@ -689,7 +681,7 @@ def _ann_ivf_index_compact(spark: SparkSession, sf_dir: str) -> DataFrame:
         path,
     )
     pre = search(path)  # reconcile path: tombstones + upsert batch
-    ivf_index_compact(spark, path, dest)
+    compact_index(spark, path, dest, "vec_id", "centroid_id")
     post = search(dest)  # clean tree: fast path again
     out = pre.withColumn("phase", F.lit("pre")).unionByName(
         post.withColumn("phase", F.lit("post"))
@@ -745,12 +737,8 @@ def _stream_ivf_upsert_replay(spark: SparkSession, sf_dir: str) -> DataFrame:
     import shutil
     import tempfile
 
-    from ..operators.ann import (
-        ivf_index_append,
-        ivf_index_delete,
-        ivf_index_search,
-        ivf_index_write,
-    )
+    from ..operators.ann import ivf_index_append, ivf_index_search, ivf_index_write
+    from ..operators.index_maint import write_tombstones
     from ..streaming.index_stream import stream_into_ivf_index
     from ._base import _drain
 
@@ -786,7 +774,7 @@ def _stream_ivf_upsert_replay(spark: SparkSession, sf_dir: str) -> DataFrame:
         spark, idx, centroids, q, k=5, nprobe=2, payload_cols=["vec_id", "label"]
     ).collect()  # bounded: 5 rows
     victim = int(base_rows[1]["vec_id"])  # rank 2 of the full probe
-    ivf_index_delete(spark.createDataFrame([(victim,)], "vec_id long"), idx)
+    write_tombstones(spark.createDataFrame([(victim,)], "vec_id long"), idx, "vec_id")
 
     out = ivf_index_search(
         spark, idx, centroids, q, k=5, nprobe=2, payload_cols=["vec_id", "label"]

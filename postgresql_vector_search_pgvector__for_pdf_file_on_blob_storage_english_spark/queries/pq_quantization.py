@@ -239,7 +239,7 @@ def _ivfpq_fixture(spark: SparkSession, sf_dir: str):
     # warm in-session min-of-9 A/B, but both the 5-run cold bench
     # medians (probe 0.77 -> 0.93 s, index_search 4.02 -> 4.75 s vs the
     # pre-change baseline) and an alternating bench-like process A/B
-    # (tools/ab_cold_ivfpq.py, 8 runs each: probe ~2.27 vs ~1.00 s,
+    # (commit c63aeb1, 8 runs each: probe ~2.27 vs ~1.00 s,
     # index_search ~3.68 vs ~3.00 s) show the blocking collect +
     # createDataFrame costs far more per invocation than the lazy
     # 16-row pushed-filter scans it removes.  Keep the lazy branch.

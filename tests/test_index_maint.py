@@ -21,8 +21,6 @@ from pyspark.sql import functions as F
 from postgresql_vector_search_pgvector__for_pdf_file_on_blob_storage_english_spark.operators.ann import (
     assign_ivf,
     ivf_index_append,
-    ivf_index_compact,
-    ivf_index_delete,
     ivf_index_search,
     ivf_index_write,
 )
@@ -32,6 +30,7 @@ from postgresql_vector_search_pgvector__for_pdf_file_on_blob_storage_english_spa
     index_state,
     next_batch_id,
     reconcile,
+    write_tombstones,
 )
 
 SF = "/root/testdata/sf0.001"
@@ -138,8 +137,8 @@ class TestTombstonesAndUpserts:
         base = _search_key(spark, path, centroids, q)
         victim = base[0][0]  # nearest neighbour
 
-        ivf_index_delete(
-            spark.createDataFrame([(victim,)], "vec_id long"), path
+        write_tombstones(
+            spark.createDataFrame([(victim,)], "vec_id long"), path, "vec_id"
         )
         after = _search_key(spark, path, centroids, q)
         assert victim not in [t[0] for t in after]
@@ -177,7 +176,7 @@ class TestCompaction:
         q = list(emb.filter(F.col("vec_id") == PROBE_ID).first()["embedding"])
         pre = _search_key(spark, path, centroids, q)
         victim, upserted = pre[1][0], pre[2][0]
-        ivf_index_delete(spark.createDataFrame([(victim,)], "vec_id long"), path)
+        write_tombstones(spark.createDataFrame([(victim,)], "vec_id long"), path, "vec_id")
         mutated = emb.filter(F.col("vec_id") == upserted).withColumn(
             "label", F.lit(777).cast(emb.schema["label"].dataType)
         )
@@ -189,7 +188,7 @@ class TestCompaction:
         src, dest = str(tmp_path / "src"), str(tmp_path / "dest")
         q = self._build_messy(spark, emb, centroids, src)
         pre = _search_key(spark, src, centroids, q)
-        ivf_index_compact(spark, src, dest)
+        compact_index(spark, src, dest, "vec_id", "centroid_id")
         assert _search_key(spark, dest, centroids, q) == pre
 
     def test_compact_drops_stale_rows_and_tombstones(self, spark, emb_cent, tmp_path):
@@ -199,7 +198,7 @@ class TestCompaction:
 
         n_physical_src = spark.read.parquet(src).count()
         n_logical = emb.count() - 1  # one id tombstoned, one superseded
-        ivf_index_compact(spark, src, dest)
+        compact_index(spark, src, dest, "vec_id", "centroid_id")
         assert spark.read.parquet(dest).count() == n_logical
         # src carried 1 superseded + 1 tombstoned extra physical row
         assert n_physical_src == n_logical + 2
@@ -220,11 +219,74 @@ class TestCompaction:
         emb, centroids = emb_cent
         src, dest = str(tmp_path / "src"), str(tmp_path / "dest")
         ivf_index_write(assign_ivf(emb, centroids), src)
-        ivf_index_delete(spark.createDataFrame([(PROBE_ID,)], "vec_id long"), src)
+        write_tombstones(spark.createDataFrame([(PROBE_ID,)], "vec_id long"), src, "vec_id")
         ivf_index_rebuild(spark, src, dest, k=8)
         ids = {r["vec_id"] for r in spark.read.parquet(dest).select("vec_id").collect()}
         assert PROBE_ID not in ids
         assert len(ids) == emb.count() - 1
+
+
+class TestProbeTiebreak:
+    def test_equal_centroids_probe_lower_id(self, spark, emb_cent, tmp_path):
+        """IVF, IVF-SQ8 and IVF-PQ rank probes through one probe_lists:
+        when two centroids hold the same vector, the (distance,
+        centroid_id) tiebreak must probe the lower id in every family."""
+        from postgresql_vector_search_pgvector__for_pdf_file_on_blob_storage_english_spark.operators.index_maint import (
+            probe_lists,
+        )
+        from postgresql_vector_search_pgvector__for_pdf_file_on_blob_storage_english_spark.operators.knn import (
+            knn,
+        )
+        from postgresql_vector_search_pgvector__for_pdf_file_on_blob_storage_english_spark.operators.pq import (
+            fixed_codebooks,
+            pq_index_search,
+            pq_index_write,
+        )
+        from postgresql_vector_search_pgvector__for_pdf_file_on_blob_storage_english_spark.operators.quant import (
+            ivf_sq8_index_search,
+            ivf_sq8_index_write,
+        )
+
+        emb, centroids = emb_cent
+        lo, hi = 3, 9
+        q = list(emb.filter(F.col("vec_id") == hi).first()["embedding"])
+        # centroid `lo` takes centroid `hi`'s vector: both at distance 0
+        id_type = centroids.schema["centroid_id"].dataType
+        tied = centroids.filter(F.col("centroid_id") != lo).unionByName(
+            centroids.filter(F.col("centroid_id") == hi).withColumn(
+                "centroid_id", F.lit(lo).cast(id_type)
+            )
+        )
+        assert [r["centroid_id"] for r in probe_lists(tied, q, 2)] == [lo, hi]
+
+        # the index lists come from the untied centroids, so list `lo`
+        # and list `hi` hold different rows
+        assigned = assign_ivf(emb, centroids)
+
+        def exact(cid):
+            lst = assigned.filter(F.col("centroid_id") == cid)
+            return {r["vec_id"] for r in knn(lst, q, k=5).collect()}
+
+        want = exact(lo)
+        assert want and want != exact(hi)
+
+        ivf, sq8, pq = (str(tmp_path / n) for n in ("ivf", "sq8", "pq"))
+        ivf_index_write(assigned, ivf)
+        ivf_sq8_index_write(emb, centroids, sq8)
+        books = fixed_codebooks(emb)
+        pq_index_write(emb, centroids, books, pq)
+        # oversample covers a whole list, so the rerank is exact over it
+        got = {
+            "ivf": ivf_index_search(spark, ivf, tied, q, k=5, nprobe=1),
+            "ivf_sq8": ivf_sq8_index_search(
+                spark, sq8, tied, emb, q, k=5, nprobe=1, oversample=1000
+            ),
+            "ivf_pq": pq_index_search(
+                spark, pq, tied, emb, q, books, k=5, nprobe=1, oversample=1000
+            ),
+        }
+        for family, out in got.items():
+            assert {r["vec_id"] for r in out.collect()} == want, family
 
 
 class TestMaintPrimitives:
@@ -277,8 +339,6 @@ class TestPqMaintenance:
         import numpy as np
 
         from postgresql_vector_search_pgvector__for_pdf_file_on_blob_storage_english_spark.operators.pq import (
-            pq_index_compact,
-            pq_index_delete,
             pq_index_search,
             fixed_codebooks,
             pq_index_write,
@@ -306,13 +366,13 @@ class TestPqMaintenance:
 
         base = search(src)
         victim = base[0][0]
-        pq_index_delete(
-            spark.createDataFrame([(victim,)], "vec_id long"), src
+        write_tombstones(
+            spark.createDataFrame([(victim,)], "vec_id long"), src, "vec_id"
         )
         after = search(src)
         assert victim not in [v for v, _ in after] and len(after) == 5
 
-        pq_index_compact(spark, src, dest)
+        compact_index(spark, src, dest, "vec_id", "centroid_id")
         assert search(dest) == after
         ids = {r["vec_id"] for r in spark.read.parquet(dest).collect()}
         assert victim not in ids and len(ids) == emb.count() - 1
@@ -429,7 +489,7 @@ class TestCompactSchema:
         src, dest = str(tmp_path / "src"), str(tmp_path / "dest")
         ivf_index_write(assign_ivf(emb, centroids), src)
         ivf_index_append(emb.filter(F.col("vec_id") == PROBE_ID), centroids, src)
-        ivf_index_compact(spark, src, dest)
+        compact_index(spark, src, dest, "vec_id", "centroid_id")
         src_fields = {f.name: f.dataType for f in spark.read.parquet(src).schema}
         dest_fields = {f.name: f.dataType for f in spark.read.parquet(dest).schema}
         assert src_fields == dest_fields

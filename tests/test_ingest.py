@@ -276,6 +276,37 @@ class TestEmbedQuarantine:
                 "COMPLETED",
             }
 
+    def test_nan_embedding_fails_insertion(self, spark, pdf_dir):
+        """pgvector's VECTOR(n) rejects non-finite vectors: a chunk whose
+        embedding holds a NaN must terminate FAILED_DB_INSERTION with no
+        FINISH_* events, and validate_corpus must return it.  The
+        endpoint raises nothing, so no retry backoff is paid."""
+
+        def nan_for_vectors(texts):
+            vecs = [hash_embed_text(t, 16) for t in texts]
+            return [
+                [float("nan")] + v[1:] if "vectors" in t else v
+                for t, v in zip(texts, vecs)
+            ]
+
+        corpus, status = ingest_pages(
+            pdf_source(spark, pdf_dir), dim=16, embed_fn=nan_for_vectors
+        )
+        poisoned = {
+            r["id"]
+            for r in corpus.filter(F.col("origntext").contains("vectors")).collect()
+        }
+        assert poisoned, "fixture has no chunk mentioning 'vectors'"
+        assert {r["id"] for r in validate_corpus(corpus, dim=16).collect()} == poisoned
+        history = {}
+        for r in status.collect():
+            history.setdefault(r["id"], set()).add(r["status"])
+        for i in poisoned:
+            assert history[i] == {"PAGE_SEPARATE_FINISHED", "FAILED_DB_INSERTION"}
+        current = {r["id"]: r["status"] for r in status_upsert(status).collect()}
+        assert all(current[i] == "FAILED_DB_INSERTION" for i in poisoned)
+        assert all(current[i] == "COMPLETED" for i in set(current) - poisoned)
+
     def test_on_error_fail_raises(self, spark, pdf_dir):
         from postgresql_vector_search_pgvector__for_pdf_file_on_blob_storage_english_spark.operators.ingest import (
             embed_chunks,

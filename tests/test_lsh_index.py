@@ -132,14 +132,14 @@ class TestMultiprobe:
 
     def test_persisted_multiprobe_prunes_and_matches(self, spark, index):
         from postgresql_vector_search_pgvector__for_pdf_file_on_blob_storage_english_spark.operators.ann import (
-            lsh_index_search_multiprobe,
+            lsh_index_search,
             lsh_index_write,
             lsh_search_multiprobe,
         )
 
         emb, planes, path, q = index
         lsh_index_write(emb, path, planes)  # rebuild after delete-proof
-        persisted = lsh_index_search_multiprobe(
+        persisted = lsh_index_search(
             spark, path, q, planes, k=5, max_flips=1, payload_cols=["vec_id", "label"]
         )
         pf = [f for f in partition_filters(persisted) if "bucket" in f]

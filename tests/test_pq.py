@@ -222,8 +222,10 @@ class TestPersistedIvfPq:
         import shutil as _sh
 
         from postgresql_vector_search_pgvector__for_pdf_file_on_blob_storage_english_spark.operators.pq import (
-            _rank_probes,
             pq_index_search,
+        )
+        from postgresql_vector_search_pgvector__for_pdf_file_on_blob_storage_english_spark.operators.index_maint import (
+            probe_lists,
         )
 
         centroids, path, q = index
@@ -236,7 +238,7 @@ class TestPersistedIvfPq:
         ]
         probed = {
             f"centroid_id={cid}"
-            for _, cid, _ in _rank_probes(centroids, q, 1, "centroid_id", "centroid_vec")
+            for cid, _ in probe_lists(centroids, q, 1)
         }
         for b in os.listdir(path):
             if not b.startswith("batch_id="):

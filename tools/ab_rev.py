@@ -1,9 +1,9 @@
-"""In-session A/B against an arbitrary git rev (round 14): same method
-as ab_inline.py / ab_inline4.py — the OLD source of one function is
-extracted from ``git show <rev>:<file>`` and exec'd into the live
-module namespace, then OLD/NEW alternate rep-by-rep inside ONE Spark
-session (order flipped each rep, first rep pair dropped as JVM
-warmup), so multi-minute host-noise windows hit both variants equally.
+"""In-session A/B against an arbitrary git rev: the OLD source of one
+function is extracted from ``git show <rev>:<file>`` and exec'd into
+the live module namespace, then OLD/NEW alternate rep-by-rep inside
+ONE Spark session (order flipped each rep, first rep pair dropped as
+JVM warmup), so multi-minute host-noise windows hit both variants
+equally.
 
 Round-14 use cases:
   * VERDICT r13 item 5 — re-A/B `graph_order_episodes` against the r12
